@@ -1661,7 +1661,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "msf_supplier_co": q_msf_supplier_co,
         "luby_mis_cs": q_luby_mis_cs,
         "plm_move_supplier_co": q_plm_move_supplier_co,
-        # -- rows-only by declared design (nondeterministic reference)
+        # full value oracle: fixed levels × sweeps unroll in _plm_full_sql
         "plm_supplier_co": q_plm_supplier_co,
     }
 

@@ -58,6 +58,14 @@ def conv_graph(spark, n_convs=30000):
     return GraphDF.from_edges(edges, directed=True, weighted=True)
 
 
+def per_sec(amount: float, secs: float | None) -> float | None:
+    """amount/secs rounded; None when the kernel was filtered out or its
+    median is 0.0 s (too fast for the clock — no rate to report)."""
+    if not secs:
+        return None
+    return round(amount / secs, 1)
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     pr_iters = int(os.environ.get("BENCH_PR_ITERS", "20"))
@@ -106,13 +114,6 @@ def main():
     # ---- pagerank on the customer→supplier link graph (the headline)
     g_cs = tg.customer_supplier_graph(spark, sf_dir)
     m_cs = g_cs.number_of_edges()
-    # truncate_every fuses supersteps into one job — bit-identical
-    # (test_pagerank_truncate_cadence_bit_identical) but MEASURED slower
-    # at sf0.1 local[32] for every kernel incl. pagerank (fused medians
-    # 29.3 vs 24.7s; BENCH/BASELINE.md round-3 notes), so cadence 1 is
-    # the default everywhere; the knob remains for fixed-cost-dominated
-    # regimes (tiny per-superstep state on a large cluster)
-    pr_te = int(os.environ.get("BENCH_PR_TRUNCATE_EVERY", "1"))
     # BENCH_PR_BROADCAST=1 broadcasts the |V| rank vector into the edge
     # join (pagerank.py broadcast_rank) — measured at sf0.1 per VERDICT
     # r3 #7; the recorded winner is the default (BENCH/BASELINE.md).
@@ -121,54 +122,38 @@ def main():
     dt = timed(
         "pagerank_cs",
         lambda: pagerank_fixed(
-            g_cs, iterations=pr_iters, truncate_every=pr_te, broadcast_rank=pr_bc
+            g_cs, iterations=pr_iters, broadcast_rank=pr_bc
         ).count(),
     )
-    if dt:
+    if dt is not None:
         throughput["pagerank_cs"] = {
             "edges": m_cs,
             "supersteps": pr_iters,
-            "edges_per_sec_per_superstep": round(m_cs * pr_iters / dt, 1),
+            "edges_per_sec_per_superstep": per_sec(m_cs * pr_iters, dt),
         }
 
     # ---- weakly connected components to fixpoint
-    # fused convergence-check cadence (see components.py check_every) —
-    # bit-identical labels, fewer jobs; BENCH_WCC_CHECK_EVERY overrides.
     # BENCH_WCC_BROADCAST=0/1 pins the label-vector broadcast knob
     # (components.py broadcast_labels; default auto ≤4M rows — the same
     # measured tradeoff as pagerank's broadcast_rank)
-    wcc_ce = int(os.environ.get("BENCH_WCC_CHECK_EVERY", "1"))
     wcc_bc_env = os.environ.get("BENCH_WCC_BROADCAST")
     wcc_bc = None if wcc_bc_env is None else wcc_bc_env == "1"
     dt = timed(
         "wcc_cs",
-        lambda: weakly_connected_components(
-            g_cs, check_every=wcc_ce, broadcast_labels=wcc_bc
-        ).count(),
+        lambda: weakly_connected_components(g_cs, broadcast_labels=wcc_bc).count(),
     )
-    if dt:
-        throughput["wcc_cs"] = {"edges": m_cs, "edges_per_sec": round(m_cs / dt, 1)}
+    if dt is not None:
+        throughput["wcc_cs"] = {"edges": m_cs, "edges_per_sec": per_sec(m_cs, dt)}
 
     # ---- synchronous PLP on the dense supplier co-purchase graph
     g_co = tg.supplier_co_graph(spark, sf_dir)
     if want("plp_co"):
         m_co = g_co.number_of_edges()
-        plp_te = int(os.environ.get("BENCH_PLP_TRUNCATE_EVERY", "1"))
-        # BENCH_PLP_BROADCAST=0/1 pins the label-vector broadcast knob
-        # (plp.py broadcast_labels; measured a REGRESSION at sf0.1 — 17.0
-        # vs 14.7s medians — so the default is off, unlike wcc/pagerank)
-        plp_bc_env = os.environ.get("BENCH_PLP_BROADCAST")
-        plp_bc = None if plp_bc_env is None else plp_bc_env == "1"
-        dt = timed(
-            "plp_co",
-            lambda: plp_fixed(
-                g_co, iterations=4, truncate_every=plp_te, broadcast_labels=plp_bc
-            ).count(),
-        )
+        dt = timed("plp_co", lambda: plp_fixed(g_co, iterations=4).count())
         throughput["plp_co"] = {
             "edges": m_co,
             "supersteps": 4,
-            "edges_per_sec_per_superstep": round(m_co * 4 / dt, 1),
+            "edges_per_sec_per_superstep": per_sec(m_co * 4, dt),
         }
 
     # ---- triangle counting on the sparse transcript conv→conv graph
@@ -179,21 +164,12 @@ def main():
         dt = timed("triangles_conv", lambda: triangle_counts(g_conv).count())
         throughput["triangles_conv"] = {
             "edges": m_conv,
-            "edges_per_sec": round(m_conv / dt, 1),
+            "edges_per_sec": per_sec(m_conv, dt),
         }
 
     # ---- round-2 additions (new keys — r1 keys stay comparable)
-    kc_ce = int(os.environ.get("BENCH_KCORE_CHECK_EVERY", "1"))
-    timed(
-        "kcore_hindex_co",
-        lambda: core_decomposition_hindex(g_co, check_every=kc_ce).count(),
-    )
-
-    scc_ce = int(os.environ.get("BENCH_SCC_CHECK_EVERY", "1"))
-    timed(
-        "scc_cs",
-        lambda: strongly_connected_components(g_cs, check_every=scc_ce).count(),
-    )
+    timed("kcore_hindex_co", lambda: core_decomposition_hindex(g_co).count())
+    timed("scc_cs", lambda: strongly_connected_components(g_cs).count())
 
     # sampled betweenness on the (shallow-diameter) undirected cs graph —
     # level-synchronous Brandes is O(diameter) supersteps by nature, so the

@@ -221,14 +221,14 @@ from networkit_spark.operators.plp import plp_fixed
 # hub skew it was designed for (a per-dst window would straggle here)
 g = GraphDF(v, e, directed=False, weighted=True)
 stats = {}
-# broadcast_labels=False pins the co-partitioned shuffle-join plan (the
-# |V|-exceeds-executor regime this job evidences), like pagerank/wcc.
+# PLP always joins its labels by shuffle — the co-partitioned plan of the
+# |V|-exceeds-executor regime this job evidences, like pagerank/wcc here.
 # Steady-state per-sweep protocol (same as the pagerank job): the first
 # two sweeps pay codegen, the edge-cache build, and heap growth — the
 # metric is the median of the remaining per-sweep timings. End-to-end
 # timing at 3 trials showed ±30 percent JIT/GC trial noise; per-sweep
 # medians inside one run are far tighter.
-plp_fixed(g, iterations=sweeps, broadcast_labels=False, stats=stats).count()
+plp_fixed(g, iterations=sweeps, stats=stats).count()
 m = stats["edges"] // 2  # undirected edge count (stats counts E_sym rows)
 secs = stats["iter_secs"][2:]
 dt = statistics.median(secs)
@@ -509,11 +509,11 @@ def main():
         "|V|-exceeds-executor 100 TB regime); the small-|V| fast path:",
         "- pagerank broadcast_rank: 17.5s vs 23.4s shuffle → auto-on ≤4M rows",
         "- wcc broadcast_labels:    13.5s vs 22.0s shuffle → auto-on ≤4M rows",
-        "- plp broadcast_labels:    17.0s vs 14.7s shuffle → REGRESSION,",
-        "  default off (PLP's cost is the (dst,label) score agg whose",
-        "  map-side partials shuffle either way; the broadcast only adds a",
-        "  serial per-sweep build). All three knobs are bit-identical by",
-        "  test (test_*_broadcast_*_bit_identical).",
+        "- plp label broadcast:     17.0s vs 14.7s shuffle → REGRESSION,",
+        "  removed (PLP's cost is the (dst,label) score agg whose map-side",
+        "  partials shuffle either way; the broadcast only added a serial",
+        "  per-sweep build). wcc's knob is bit-identical by test",
+        "  (test_wcc_broadcast_labels_bit_identical).",
         "",
         "SCC serial-term decomposition (round 4, uniform 2^21/8): fitting",
         "T(N) = f + p/N to the measured 2/8-core times gave f ~= 82s of",
@@ -533,7 +533,7 @@ def main():
         "   exactly). Driver-sequenced sweeps 14 -> 7; rows per sweep",
         "   double (p unchanged, f halved). Extra pointer jumps were",
         "   measured FIRST and rejected: sweep count is edge-propagation-",
-        "   bound, not pointer-depth-bound (jumps_per_sweep 2/3 left 14",
+        "   bound, not pointer-depth-bound (2 or 3 jumps per sweep left 14",
         "   sweeps and only added join cost).",
         "2) DELTA FRONTIER: only colors changed last sweep propagate",
         "   (monotone-max induction => bit-identical per sweep); late",

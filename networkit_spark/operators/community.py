@@ -831,6 +831,7 @@ def parallel_agglomerative_clusterer(
     from networkit_spark.plans.checkpoint import stats_safe_checkpoint
 
     gc = graph
+    n = graph.number_of_nodes()
     mapping_total: DataFrame | None = None
     for _ in range(max_levels):
         scored = modularity_edge_scores(gc).select(
@@ -839,8 +840,11 @@ def parallel_agglomerative_clusterer(
         scored_g = GraphDF(gc.V, scored, directed=False, weighted=True)
         matching = local_max_matching(scored_g)
         coarse, mapping = matching_coarsening(gc, matching)
-        n = gc.number_of_nodes()
-        cn = coarse.number_of_nodes()
+        # the coarse node count fills the cache that the level's vertex
+        # checkpoint below reads (stats_safe_checkpoint's protocol, with
+        # its count kept); the fine count is the previous level's
+        coarse_v = coarse.V.persist()
+        cn = coarse_v.count()
         diff = n - cn
         repeat = (
             diff > 0
@@ -848,6 +852,7 @@ def parallel_agglomerative_clusterer(
             and diff / n > rel_repeat_threshold
         )
         if not repeat:
+            coarse_v.unpersist()
             break  # reference discards the failing contraction (:71-73)
         # accept the level: fold the mapping into the fine→coarsest map and
         # truncate lineage (levels shrink geometrically; the map stays |V|).
@@ -867,11 +872,13 @@ def parallel_agglomerative_clusterer(
                 .select("id", F.col("next_id").alias("super_id"))
             )
         gc = GraphDF(
-            stats_safe_checkpoint(coarse.V),
+            coarse_v.localCheckpoint(eager=True),
             stats_safe_checkpoint(coarse.E),
             directed=False,
             weighted=True,
         )
+        coarse_v.unpersist()
+        n = cn
     if mapping_total is None:
         # no level accepted — singletons (allToSingletons on the input)
         return graph.V.select("id", F.col("id").alias("label"))

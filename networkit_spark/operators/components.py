@@ -21,18 +21,24 @@ makes convergence O(log n) supersteps instead of O(diameter) — essential at
 shuffles. Labels are always node ids, so the jump is a self-join on the
 label table (|V|-sized, far cheaper than an edge shuffle).
 
-Every superstep localCheckpoints (or Parquet-checkpoints with metrics) to
-truncate lineage; the frontier count doubles as the convergence test.
+The fixpoint loop itself — one aggregate job per superstep that fills the
+sweep's cache and counts changed rows, lazy lineage truncation (or Parquet
+checkpoints with metrics), cache release — is plans/fixpoint.py, shared
+with SCC's struct-max coloring and h-index k-core.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from networkit_spark.graph import GraphDF
+from networkit_spark.plans.fixpoint import monotone_fixpoint
+
+
+# Pointer-jump remap threshold (distinct labels): below it the jump's
+# shuffled |V|⋈|V| self-join becomes a broadcast remap — see the jump site.
+_JUMP_BROADCAST_ROWS = 512_000
 
 
 def _hash_min_fixpoint(
@@ -41,43 +47,29 @@ def _hash_min_fixpoint(
     max_iterations: int = 200,
     pointer_jump: bool = True,
     checkpointer=None,
-    check_every: int = 1,
     broadcast_labels: bool | None = None,
-    jump_broadcast_rows: int = 512_000,
 ) -> DataFrame:
-    """Fixpoint labels (id, label) with label = min node id of the component.
-
-    `check_every`: fuse this many supersteps into one materialization —
-    intermediate sweeps cache lazily (zero jobs launched); the block-end
-    checkpoint executes the whole block as ONE job, with the intermediate
-    references hitting the block cache. The convergence test ("the LAST
-    sweep changed nothing" — read off the carried `old` column, no compare
-    join) is cadence-invariant, so final labels are bit-identical (worst
-    case k-1 no-op sweeps inside the final block). Forced to 1 when a
-    checkpointer is attached (per-superstep metrics need per-superstep
-    actions).
+    """Fixpoint labels (id, label) with label = min node id of the component,
+    iterated by plans/fixpoint.py (one aggregate job per sweep).
 
     `broadcast_labels`: broadcast the |V|-sized label vector into the edge
     join (and the |V|-sized updates into the |V|⋈|V| joins) instead of
     shuffling it — the same measured tradeoff as pagerank's broadcast_rank
-    (pagerank.py:109-118). MEASURED at sf0.1 local[32] (fresh JVM per run,
+    auto-gate in pagerank.py. MEASURED at sf0.1 local[32] (fresh JVM per run,
     1 warmup + 3 trials): broadcast medians 13.5s vs shuffle-join 22.0s,
     and much tighter spread. A win while the vertex state fits an executor;
     the co-partitioned shuffle join stays the 100-TB path. None = auto by
     the same ≤4M-row threshold. Labels are bit-identical either way
     (test_wcc_broadcast_labels_bit_identical).
 
-    `jump_broadcast_rows`: in the non-broadcast (big-graph) path, the
-    pointer-jump self-join switches to a broadcast remap once the number
-    of DISTINCT labels fits under this row count — see the comment at the
-    jump site for why this removes the giant-component straggler. The
-    decision uses the PREVIOUS block-end's distinct-label count (folded
-    into the convergence agg — zero extra jobs; hash-min label sets only
-    shrink, so the lagged count is an upper bound and the broadcast never
-    overshoots). 0 disables (always the shuffled self-join);
-    bit-identical either way (test_wcc_jump_remap_bit_identical)."""
-    if checkpointer is not None:
-        check_every = 1
+    In the non-broadcast (big-graph) path, the pointer-jump self-join
+    switches to a broadcast remap once the number of DISTINCT labels fits
+    under `_JUMP_BROADCAST_ROWS` — see the jump site for why this removes
+    the giant-component straggler. The decision uses the PREVIOUS sweep's
+    distinct-label count (folded into the convergence agg — zero extra
+    jobs; hash-min label sets only shrink, so the lagged count is an upper
+    bound and the broadcast never overshoots). Labels are bit-identical
+    either way (test_wcc_jump_remap_bit_identical)."""
     labels = vertices.select("id", F.col("id").alias("label"))
     start = 0
     if checkpointer is not None:
@@ -97,7 +89,6 @@ def _hash_min_fixpoint(
     labels = labels.localCheckpoint(eager=True)
     if broadcast_labels is None:
         broadcast_labels = labels.count() <= 4_000_000
-    interm: list[DataFrame] = []
     e = (
         edges_sym.select("src", "dst")
         .filter("src != dst")
@@ -109,19 +100,8 @@ def _hash_min_fixpoint(
     def _bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_labels else df
 
-    remap_live = (
-        pointer_jump
-        and not broadcast_labels
-        and check_every <= 1
-        and jump_broadcast_rows > 0
-    )
-    # distinct-label count from the previous block end (None = unknown);
-    # drives the remap decision with a one-sweep lag — see the jump site
-    prev_distinct: int | None = None
-    # cache backing the previous sweep's LAZY localCheckpoint — released
-    # only after the next sweep's count job has materialized it
-    prev_cache: DataFrame | None = None
-    n_updated = 0
+    remap_live = pointer_jump and not broadcast_labels
+
     # DELTA FRONTIER (the _struct_max_fixpoint pattern, min instead of
     # max): only labels that CHANGED last sweep propagate — monotone-min
     # induction makes every sweep's values bit-identical to the
@@ -130,17 +110,13 @@ def _hash_min_fixpoint(
     # propagation OR pointer jump — re-enters the delta via the carried
     # `old` column). Late sweeps' |E|-sized join outputs collapse to
     # slivers; in broadcast mode the broadcast side shrinks with it.
-    delta = labels
-    for it in range(start, max_iterations):
-        t0 = time.time()
+    def sweep(s) -> DataFrame:
+        labels, delta = s.state, s.delta
         nbr_min = (
             e.join(_bc(delta), e.src == delta.id)
             .groupBy("dst")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # carry the pre-sweep label through as `old`: the convergence count
-        # is then a cheap scan of the materialized rows — no extra
-        # |V|⋈|V| compare join per sweep
         new_labels = (
             labels.join(_bc(nbr_min), labels.id == nbr_min.dst, "left")
             .select(
@@ -151,160 +127,61 @@ def _hash_min_fixpoint(
                 F.col("label").alias("old"),
             )
         )
-        pj_cache = None
-        if pointer_jump:
-            # label[u] <- label[label[u]] : labels are node ids, so this is a
-            # |V|-sized self-join — halves the remaining propagation depth.
-            # The pre-jump frame feeds BOTH sides of that join; without a
-            # persist each side's stage recomputes the whole hash-min join
-            # subtree (only its exchanges are reused), so pin it lazily and
-            # let the one materializing job fill the cache.
-            new_labels = new_labels.persist()
-            pj_cache = new_labels
-            parent = new_labels.select(
-                F.col("id").alias("p_id"), F.col("label").alias("p_label")
-            )
-            remap = None
-            if (
-                remap_live
-                and prev_distinct is not None
-                and prev_distinct <= jump_broadcast_rows
-            ):
-                # The jump join keys on the LABEL VALUE — as components
-                # coalesce, most of |V| carries the giant component's
-                # label, so the shuffled self-join funnels into one
-                # straggler task. The remap table (label -> its current
-                # label) has only #distinct-labels rows, which SHRINKS
-                # geometrically exactly as that skew grows: restrict
-                # `parent` to labels actually referenced (the distinct agg
-                # is map-side combinable — the giant label collapses in
-                # the combiners, no skew) and broadcast it once it fits,
-                # turning the skewed |V|⋈|V| exchange into a map-side
-                # hash lookup. MEASURED (uniform 2^22/8, 8 cores): the
-                # local straggler is only ~70MB (~1-2s/sweep), so the
-                # remap is a WASH at threshold 512k (101.4 vs 100.8s
-                # never-remap) and a REGRESSION at 4M (118.7s — early
-                # sweeps have millions of distinct labels and the
-                # driver-side broadcast build is serial). The default
-                # stays LOW so the build never dominates; the payoff is
-                # the 100-TB tier, where the straggler task at 10^10
-                # vertices is ~250GB while the late-sweep remap is
-                # kilobytes. The fits-under-threshold decision uses the
-                # PREVIOUS block end's countDistinct (folded into the
-                # convergence agg — zero extra jobs per sweep; hash-min
-                # only ever REMOVES label values, so the lagged count
-                # upper-bounds this sweep's and the broadcast can't
-                # overshoot). Skipped inside fused blocks (check_every>1):
-                # the fused-block contract is zero intra-block jobs, and
-                # there is no block end to carry the count from.
-                lbls = (
-                    new_labels.select(F.col("label").alias("p_id")).distinct()
-                )
-                remap = parent.join(F.broadcast(lbls), "p_id")
-                remap = F.broadcast(remap)
-            if remap is None:
-                remap = _bc(parent)
-            new_labels = (
-                new_labels.join(
-                    remap, new_labels.label == remap.p_id, "left"
-                )
-                .select(
-                    "id",
-                    F.coalesce("p_label", "label").alias("label"),
-                    "old",
-                )
-            )
-        block_end = (
-            check_every <= 1
-            or (it - start) % check_every == check_every - 1
-            or it >= max_iterations - 1
+        if not pointer_jump:
+            return new_labels
+        # label[u] <- label[label[u]] : labels are node ids, so this is a
+        # |V|-sized self-join — halves the remaining propagation depth.
+        # The pre-jump frame feeds BOTH sides of that join; without a
+        # persist each side's stage recomputes the whole hash-min join
+        # subtree (only its exchanges are reused), so pin it lazily and
+        # let the one materializing job fill the cache.
+        new_labels = s.pin(new_labels)
+        parent = new_labels.select(
+            F.col("id").alias("p_id"), F.col("label").alias("p_label")
         )
-        if not block_end:
-            # fused superstep: lazy cache only — no job launched here; the
-            # block-end materialization runs the whole block at once
-            new_labels = new_labels.persist()
-            interm.append(new_labels)
-            if pj_cache is not None:
-                interm.append(pj_cache)
-            labels = new_labels.select("id", "label")
-            delta = new_labels.filter(
-                F.col("label") != F.col("old")
-            ).select("id", "label")
-            continue
-        # convergence test = "the LAST sweep changed nothing": a sweep is a
-        # deterministic function, so no-change ⟹ fixpoint — valid at any
-        # cadence, and the returned labels are cadence-invariant.
-        # persist FIRST, count from cache, checkpoint from cache (see
-        # _struct_max_fixpoint — direct eager checkpoints on multi-consumer
-        # iterative pipelines re-execute geometrically).
-        # ONE driver-sequenced job per sweep: the convergence agg fills the
-        # cache, and the lineage-truncating localCheckpoint is LAZY — its
-        # LogicalRDD plan break is immediate, but materialization rides
-        # inside the NEXT sweep's job, so the backing cache is released one
-        # sweep late (prev_cache) instead of paying a second job now.
-        cached = new_labels.persist()
-        if remap_live:
-            # one agg fills the cache AND yields both the convergence count
-            # and the next sweep's remap decision — countDistinct's partial
-            # phase collapses the giant label map-side, so the extra column
-            # shuffles only per-partition distinct counts
-            row = cached.agg(
-                F.sum(
-                    (F.col("label") != F.col("old")).cast("long")
-                ).alias("chg"),
-                F.countDistinct("label").alias("nd"),
-            ).first()
-            n_updated = int(row["chg"] or 0)
-            prev_distinct = int(row["nd"])
+        if (
+            remap_live
+            and s.last is not None
+            and s.last["nd"] <= _JUMP_BROADCAST_ROWS
+        ):
+            # The jump join keys on the LABEL VALUE — as components
+            # coalesce, most of |V| carries the giant component's label, so
+            # the shuffled self-join funnels into one straggler task. The
+            # remap table (label -> its current label) has only
+            # #distinct-labels rows, which SHRINKS geometrically exactly as
+            # that skew grows: restrict `parent` to labels actually
+            # referenced (the distinct agg is map-side combinable — the
+            # giant label collapses in the combiners, no skew) and
+            # broadcast it once it fits, turning the skewed |V|⋈|V|
+            # exchange into a map-side hash lookup. MEASURED (uniform
+            # 2^22/8, 8 cores): the local straggler is only ~70MB (~1-2s/
+            # sweep), so the remap is a WASH at threshold 512k (101.4 vs
+            # 100.8s never-remap) and a REGRESSION at 4M (118.7s — early
+            # sweeps have millions of distinct labels and the driver-side
+            # broadcast build is serial). The threshold stays LOW so the
+            # build never dominates; the payoff is the 100-TB tier, where
+            # the straggler task at 10^10 vertices is ~250GB while the
+            # late-sweep remap is kilobytes. The fits-under-threshold
+            # decision uses the PREVIOUS sweep's countDistinct (hash-min
+            # only ever REMOVES label values, so the lagged count
+            # upper-bounds this sweep's and the broadcast can't overshoot).
+            lbls = new_labels.select(F.col("label").alias("p_id")).distinct()
+            remap = F.broadcast(parent.join(F.broadcast(lbls), "p_id"))
         else:
-            n_updated = cached.filter(F.col("label") != F.col("old")).count()
-        if n_updated == 0:
-            # no-op sweep: values equal the previous (already-truncated)
-            # labels — return those, no checkpoint job needed. The count
-            # job above also materialized the previous lazy checkpoint,
-            # so prev_cache is releasable below.
-            cached.unpersist()
-            if pj_cache is not None:
-                pj_cache.unpersist()
-            for df in interm:
-                df.unpersist()
-            interm = []
-            break
-        if checkpointer is not None:
-            new_labels = checkpointer.save(
-                it,
-                {"labels": cached.select("id", "label")},
-                metrics={
-                    "n_updated": n_updated,
-                    "delta_norm": float(n_updated),
-                    "wall_ms": int((time.time() - t0) * 1000),
-                },
-            )["labels"]
-            labels = new_labels
-            # the Parquet-checkpointed frame drops the `old` column, so
-            # the metrics/resume path falls back to full propagation
-            delta = labels
-            cached.unpersist()
-        else:
-            new_labels = cached.localCheckpoint(eager=False)
-            labels = new_labels.select("id", "label")
-            delta = new_labels.filter(
-                F.col("label") != F.col("old")
-            ).select("id", "label")
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = cached
-        if pj_cache is not None:
-            pj_cache.unpersist()
-        for df in interm:
-            df.unpersist()
-        interm = []
-    if prev_cache is not None:
-        if n_updated != 0:
-            # loop ended on a live (unmaterialized) lazy checkpoint — one
-            # cache-scan job writes it before its backing cache goes
-            labels.count()
-        prev_cache.unpersist()
+            remap = _bc(parent)
+        return new_labels.join(
+            remap, new_labels.label == remap.p_id, "left"
+        ).select("id", F.coalesce("p_label", "label").alias("label"), "old")
+
+    # one agg fills the cache AND yields both the convergence count and the
+    # next sweep's remap decision — countDistinct's partial phase collapses
+    # the giant label map-side, so the extra column shuffles only
+    # per-partition distinct counts
+    labels = monotone_fixpoint(
+        labels, sweep, "label", max_iterations, start=start,
+        aggs=[F.countDistinct("label").alias("nd")] if remap_live else (),
+        checkpointer=checkpointer, ckpt_name="labels",
+    )
     e.unpersist()
     return labels
 
@@ -324,8 +201,7 @@ def renumber_dense_by_min_id(labels: DataFrame) -> DataFrame:
 
 def connected_components(
     graph: GraphDF, max_iterations: int = 200, checkpointer=None,
-    check_every: int = 1, broadcast_labels: bool | None = None,
-    jump_broadcast_rows: int = 512_000,
+    broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """(id: long, component: long) — exact reference component ids.
 
@@ -340,16 +216,14 @@ def connected_components(
         )
     labels = _hash_min_fixpoint(
         graph.E_sym, graph.V, max_iterations, checkpointer=checkpointer,
-        check_every=check_every, broadcast_labels=broadcast_labels,
-        jump_broadcast_rows=jump_broadcast_rows,
+        broadcast_labels=broadcast_labels,
     )
     return renumber_dense_by_min_id(labels)
 
 
 def weakly_connected_components(
     graph: GraphDF, max_iterations: int = 200, checkpointer=None,
-    check_every: int = 1, broadcast_labels: bool | None = None,
-    jump_broadcast_rows: int = 512_000,
+    broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """WeaklyConnectedComponents.cpp:32 — hash-min over the symmetrized view
     of a directed edge table. (The sequential engine's merge structure,
@@ -357,8 +231,7 @@ def weakly_connected_components(
     propagation + pointer jumping plays its role here.)"""
     labels = _hash_min_fixpoint(
         graph.E_sym, graph.V, max_iterations, checkpointer=checkpointer,
-        check_every=check_every, broadcast_labels=broadcast_labels,
-        jump_broadcast_rows=jump_broadcast_rows,
+        broadcast_labels=broadcast_labels,
     )
     return renumber_dense_by_min_id(labels)
 
@@ -367,35 +240,21 @@ def _struct_max_fixpoint(
     edges: DataFrame,
     init_color: DataFrame,
     max_inner: int,
-    check_every: int = 1,
     stats: dict | None = None,
-    jumps_per_sweep: int = 1,
     broadcast_colors: bool = False,
 ) -> DataFrame:
     """Shared SCC inner loop: struct-max reachability coloring over `edges`
-    with pointer jumping via the carrier node. `init_color` is (id, c)
-    checkpointed; returns the fixpoint (id, c).
-
-    `check_every` fuses supersteps per materialization exactly like
-    `_hash_min_fixpoint`: colors are monotone non-decreasing struct maxes,
-    so the blocked convergence test (compare vs block start) is equivalent
-    and the fixpoint bit-identical at any cadence."""
-    color = init_color
-    interm: list[DataFrame] = []
-
+    with pointer jumping via the carrier node, iterated by
+    plans/fixpoint.py. `init_color` is (id, c) checkpointed; returns the
+    fixpoint (id, c). Counts its sweeps into `stats["sweeps"]`."""
     # broadcast the |V|-sized color state into every sweep join (the
-    # measured wcc broadcast_labels pattern, components.py:60-68) — the
+    # measured wcc broadcast_labels pattern, see _hash_min_fixpoint) — the
     # edge join, the update join and the jump join all lose their
     # vertex-side exchange+sort; auto-gated by the caller on active-set
     # size so the co-partitioned shuffle join stays the 100-TB path
     def _bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_colors else df
 
-    # single-job sweeps (see _hash_min_fixpoint): the lineage-truncating
-    # localCheckpoint is lazy — plan break now, materialization inside the
-    # next sweep's count job; the backing cache is released one sweep late
-    prev_cache: DataFrame | None = None
-    n_changed = 0
     # DELTA FRONTIER: only colors that CHANGED last sweep propagate.
     # Monotone-max induction makes this bit-identical per sweep to the
     # propagate-everything form: a node's current color already dominates
@@ -404,15 +263,15 @@ def _struct_max_fixpoint(
     # delta via the carried `old` column. Late sweeps — where only a
     # sliver of the graph still moves but the full-frontier join output
     # stayed |E|-sized — collapse to near-empty join outputs.
-    delta = color
-    for it in range(max_inner):
+    def sweep(s) -> DataFrame:
+        color, delta = s.state, s.delta
+        if stats is not None:
+            stats["sweeps"] = stats.get("sweeps", 0) + 1
         nbr = (
             edges.join(_bc(delta), edges.src == delta.id)
             .groupBy("dst")
             .agg(F.max("c").alias("nc"))
         )
-        # carry the pre-sweep color as `old`: convergence is a cheap scan
-        # of the materialized rows, not an extra |V|⋈|V| compare join
         new_color = (
             color.join(_bc(nbr), color.id == nbr.dst, "left")
             .select(
@@ -428,74 +287,24 @@ def _struct_max_fixpoint(
         # sweeps on shrinking active sets, where writing the struct-typed
         # color cache every sweep costs more than the duplicated
         # post-exchange work (the exchanges themselves are reused). Keep
-        # the recompute.
-        for _j in range(max(1, jumps_per_sweep)):
-            parent = new_color.select(
-                F.col("id").alias("p_id"), F.col("c").alias("p_c")
-            )
-            new_color = (
-                new_color.join(
-                    _bc(parent), new_color.c.getField("n") == parent.p_id, "left"
-                )
-                .select(
-                    "id",
-                    F.greatest(F.col("c"), F.coalesce("p_c", F.col("c"))).alias("c"),
-                    "old",
-                )
-            )
-        block_end = (
-            check_every <= 1
-            or it % check_every == check_every - 1
-            or it >= max_inner - 1
+        # the recompute (CLAUDE.md rule 15).
+        parent = new_color.select(
+            F.col("id").alias("p_id"), F.col("c").alias("p_c")
         )
-        if not block_end:
-            new_color = new_color.persist()
-            interm.append(new_color)
-            color = new_color.select("id", "c")
-            delta = new_color.filter(F.col("c") != F.col("old")).select(
-                "id", "c"
-            )
-            continue
-        # "the LAST sweep changed nothing" ⟹ fixpoint — cadence-invariant.
-        # persist FIRST, count from cache, checkpoint from cache: an eager
-        # localCheckpoint directly on the unpersisted multi-consumer join
-        # pipeline re-executes the chain per consumer in these iterative
-        # shapes — measured 3× cost growth PER SUPERSTEP (geometric) on the
-        # transcripts conv graph until this ordering was restored.
-        cached = new_color.persist()
-        n_changed = cached.filter(F.col("c") != F.col("old")).count()
-        if stats is not None:
-            stats["sweeps"] = stats.get("sweeps", 0) + 1
-        if n_changed == 0:
-            # no-op sweep: values equal the previous (already-truncated)
-            # colors, so return those instead of paying a checkpoint job
-            cached.unpersist()
-            for df in interm:
-                df.unpersist()
-            interm = []
-            break
-        new_color = cached.localCheckpoint(eager=False)
-        color = new_color.select("id", "c")
-        delta = new_color.filter(F.col("c") != F.col("old")).select("id", "c")
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = cached
-        for df in interm:
-            df.unpersist()
-        interm = []
-    if prev_cache is not None:
-        if n_changed != 0:
-            # loop ended on a live (unmaterialized) lazy checkpoint — one
-            # cache-scan job writes it before its backing cache goes
-            color.count()
-        prev_cache.unpersist()
-    return color
+        return new_color.join(
+            _bc(parent), new_color.c.getField("n") == parent.p_id, "left"
+        ).select(
+            "id",
+            F.greatest(F.col("c"), F.coalesce("p_c", F.col("c"))).alias("c"),
+            "old",
+        )
+
+    return monotone_fixpoint(init_color, sweep, "c", max_inner)
 
 
 def strongly_connected_components(
     graph: GraphDF, max_rounds: int = 100, max_inner: int = 100,
-    check_every: int = 1, trim_sweeps: int = 3,
-    local_finish_threshold: int = 100_000, jumps_per_sweep: int = 1,
+    trim_sweeps: int = 3, local_finish_threshold: int = 100_000,
     stats: dict | None = None, broadcast_colors: bool | None = None,
     fused_fwbw: bool = True,
 ) -> DataFrame:
@@ -541,10 +350,10 @@ def strongly_connected_components(
     (test_scc_fused_fwbw_bit_identical). False = sequential fwd then
     class-restricted bwd (the r4 shape).
 
-    `jumps_per_sweep`: extra pointer jumps per sweep — MEASURED no-win
-    (uniform 2^18/8: sweep count unchanged at any value because
-    convergence is edge-propagation-bound, not pointer-depth-bound;
-    j2/j3 only added join cost, 24→38/47s at 8 cores). Keep 1.
+    Each coloring sweep makes ONE pointer jump: more jumps per sweep
+    measured no win (uniform 2^18/8: the sweep count stayed the same
+    because convergence is edge-propagation-bound, not pointer-depth-bound;
+    two or three jumps only added join cost, 24→38/47s at 8 cores).
     """
     if not graph.directed:
         raise ValueError("strongly_connected_components requires a directed graph")
@@ -557,9 +366,8 @@ def strongly_connected_components(
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     try:
         return _scc_impl(
-            graph, max_rounds, max_inner, check_every, trim_sweeps,
+            graph, max_rounds, max_inner, trim_sweeps,
             local_finish_threshold, stats=stats,
-            jumps_per_sweep=jumps_per_sweep,
             broadcast_colors=broadcast_colors, fused_fwbw=fused_fwbw,
         )
     finally:
@@ -625,10 +433,10 @@ def _tarjan_local(nodes: list[int], edges: list[tuple[int, int]]) -> list[tuple[
 
 
 def _scc_impl(
-    graph: GraphDF, max_rounds: int, max_inner: int, check_every: int = 1,
+    graph: GraphDF, max_rounds: int, max_inner: int,
     max_trim_sweeps: int = 3, local_finish_threshold: int = 100_000,
-    stats: dict | None = None, jumps_per_sweep: int = 1,
-    broadcast_colors: bool | None = None, fused_fwbw: bool = False,
+    stats: dict | None = None, broadcast_colors: bool | None = None,
+    fused_fwbw: bool = False,
 ) -> DataFrame:
     import time as _time
 
@@ -835,8 +643,7 @@ def _scc_impl(
                 .localCheckpoint(eager=False)
             )
             both = _struct_max_fixpoint(
-                e2, init2, max_inner, check_every, stats=stats,
-                jumps_per_sweep=jumps_per_sweep, broadcast_colors=bc,
+                e2, init2, max_inner, stats=stats, broadcast_colors=bc,
             )
             _t = _mark("fwd", _t)
             fc = both.filter(F.col("id") % 2 == 0).select(
@@ -871,8 +678,7 @@ def _scc_impl(
                 # storage
             ).localCheckpoint(eager=False)
             color = _struct_max_fixpoint(
-                active_e, init, max_inner, check_every, stats=stats,
-                jumps_per_sweep=jumps_per_sweep, broadcast_colors=bc,
+                active_e, init, max_inner, stats=stats, broadcast_colors=bc,
             )
             _t = _mark("fwd", _t)
             color = color.select("id", F.col("c").getField("n").alias("color"))
@@ -902,8 +708,7 @@ def _scc_impl(
                 .localCheckpoint(eager=False)
             )
             bcolor = _struct_max_fixpoint(
-                e_rev, init, max_inner, check_every, stats=stats,
-                jumps_per_sweep=jumps_per_sweep, broadcast_colors=bc,
+                e_rev, init, max_inner, stats=stats, broadcast_colors=bc,
             )
             _t = _mark("bwd", _t)
             bcolor = bcolor.select(

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from networkit_spark.graph import GraphDF
+from networkit_spark.plans.checkpoint import stats_safe_checkpoint
+from networkit_spark.plans.fixpoint import monotone_fixpoint
 
 
 def core_decomposition(graph: GraphDF, max_rounds: int = 10_000) -> DataFrame:
@@ -102,7 +104,6 @@ def core_decomposition_hindex(
     graph: GraphDF,
     max_iterations: int = 10_000,
     fixed_iterations: int | None = None,
-    check_every: int = 1,
 ) -> DataFrame:
     """(id: long, core: long) via iterative h-index propagation (Lü et al.,
     'The H-index of a network node', Nature Comms 2016):
@@ -115,16 +116,12 @@ def core_decomposition_hindex(
     WAVE — hundreds of rounds on deep-degeneracy graphs — while h-index
     converges in O(log-ish) rounds of one join + one window each, with no
     shrinking-edge-set bookkeeping. Exactness vs the peel path is pinned by
-    tests/test_traversal_kcore.py.
+    tests/test_traversal_kcore.py. The convergent path is the monotone
+    fixpoint of plans/fixpoint.py: one aggregate job per sweep, stopping
+    at the first sweep that changes no value.
 
     `fixed_iterations` runs exactly that many supersteps (SQL-oracle parity:
     DuckDB unrolls the same count — results match even pre-convergence).
-
-    `check_every`: fuse this many supersteps per materialization —
-    intermediate sweeps cache lazily (no job); the block-end convergence
-    count runs the block as one job. h-index values are monotone
-    non-increasing, so "no change across the block" ⟺ fixpoint: final
-    cores are bit-identical at any cadence (worst case k-1 no-op sweeps).
     """
     e = (
         graph.E_sym.filter("src != dst")
@@ -140,71 +137,24 @@ def core_decomposition_hindex(
         "id", F.coalesce("val", F.lit(0)).cast("long").alias("val")
     ).localCheckpoint(eager=True)
 
-    iters = fixed_iterations if fixed_iterations is not None else max_iterations
-    interm = []
-    # single-job sweeps (see components._hash_min_fixpoint): the lazy
-    # localCheckpoint's plan break is immediate but its materialization
-    # rides inside the next sweep's count job; the backing cache is
-    # released one sweep late
-    prev_cache = None
-    n_changed = 0
-    for it in range(iters):
-        h = hindex_sweep(e, c)
+    def sweep(c: DataFrame) -> DataFrame:
         # join against c (≡ V, carries the pre-sweep value as `old`): the
         # convergence count is a cheap scan of the materialized rows — no
         # extra |V|⋈|V| compare join per sweep
-        new_c = c.join(h, c.id == h.dst, "left").select(
+        h = hindex_sweep(e, c)
+        return c.join(h, c.id == h.dst, "left").select(
             "id",
             F.coalesce("h", F.lit(0)).cast("long").alias("val"),
             F.col("val").alias("old"),
         )
-        if fixed_iterations is not None:
-            # stats-safe: new_c references c twice (values + the h sweep),
-            # so the multiplied sizeInBytes estimate would double its digit
-            # count per sweep through a bare checkpoint (CLAUDE.md rule 16)
-            from networkit_spark.plans.checkpoint import stats_safe_checkpoint
 
-            c = stats_safe_checkpoint(new_c.select("id", "val"))
-            continue
-        block_end = (
-            check_every <= 1
-            or it % check_every == check_every - 1
-            or it >= iters - 1
-        )
-        if not block_end:
-            # fused superstep: lazy cache — the block-end checkpoint below
-            # materializes the whole block in one job
-            new_c = new_c.persist()
-            interm.append(new_c)
-            c = new_c.select("id", "val")
-            continue
-        # "the LAST sweep changed nothing" ⟹ fixpoint (deterministic sweep
-        # function) — cadence-invariant, final cores bit-identical.
-        # persist FIRST, count from cache, checkpoint from cache (see
-        # components._struct_max_fixpoint — direct eager checkpoints on
-        # multi-consumer iterative pipelines re-execute geometrically)
-        cached = new_c.persist()
-        n_changed = cached.filter(F.col("val") != F.col("old")).count()
-        if n_changed == 0:
-            # no-op sweep: values equal the previous (already-truncated) c
-            cached.unpersist()
-            for df in interm:
-                df.unpersist()
-            interm = []
-            break
-        new_c = cached.localCheckpoint(eager=False)
-        c = new_c.select("id", "val")
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = cached
-        for df in interm:
-            df.unpersist()
-        interm = []
-    if prev_cache is not None:
-        if n_changed != 0:
-            # loop ended on a live (unmaterialized) lazy checkpoint
-            c.count()
-        prev_cache.unpersist()
+    if fixed_iterations is None:
+        c = monotone_fixpoint(c, lambda s: sweep(s.state), "val", max_iterations)
+    for _ in range(fixed_iterations or 0):
+        # stats-safe: the sweep references c twice (values + the h sweep),
+        # so the multiplied sizeInBytes estimate would double its digit
+        # count per sweep through a bare checkpoint (CLAUDE.md rule 16)
+        c = stats_safe_checkpoint(sweep(c).select("id", "val"))
     e.unpersist()
     return c.select("id", F.col("val").alias("core"))
 

@@ -279,25 +279,35 @@ def local_max_matching(graph: GraphDF, max_rounds: int = 64) -> DataFrame:
     """LocalMaxMatcher (matching/LocalMaxMatcher.cpp): iterative mutual-best
     -edge matching — an edge is matched when it is the best (max weight,
     deterministic tie-break) incident edge of BOTH endpoints; matched nodes
-    drop out; repeat. Returns matched edges (src, dst, weight)."""
-    from pyspark.sql import Window
+    drop out; repeat. Returns matched edges (src, dst, weight).
 
+    Two jobs per round: the mutual-pair count fills that round's cache (an
+    empty round ends the loop — with edges left, some max-weight edge is
+    always mutual-best), and the shrunk edge table is checkpointed. The rounds'
+    pairs are unioned and checkpointed once at the end."""
     e = (
         graph.E_sym.filter("src != dst")
         .select("src", "dst", "weight")
         .localCheckpoint(eager=True)
     )
-    matched = None
+    rounds: list[DataFrame] = []
     for _ in range(max_rounds):
-        if e.limit(1).count() == 0:
-            break
-        w = Window.partitionBy("src").orderBy(
-            F.desc("weight"), F.asc("dst")
-        )
+        # best incident edge per src = max weight, then min dst — one
+        # map-side-combinable struct max, not a per-src sort window (a hub
+        # src would sort all its edges in one task). Spark orders NaN above
+        # every number, so NaN weights win first as under desc(weight).
         best = (
-            e.withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .select("src", "dst", "weight")
+            e.groupBy("src")
+            .agg(
+                F.max(
+                    F.struct("weight", (-F.col("dst")).alias("nd"))
+                ).alias("top")
+            )
+            .select(
+                "src",
+                (-F.col("top.nd")).alias("dst"),
+                F.col("top.weight").alias("weight"),
+            )
         )
         best_rev = best.select(
             F.col("src").alias("r_src"),
@@ -310,11 +320,11 @@ def local_max_matching(graph: GraphDF, max_rounds: int = 64) -> DataFrame:
             )
             .filter(F.col("src") < F.col("dst"))
             .select("src", "dst", "weight")
-        ).localCheckpoint(eager=True)
-        if mutual.limit(1).count() == 0:
+        ).persist()
+        if mutual.count() == 0:
+            mutual.unpersist()
             break
-        matched = mutual if matched is None else matched.unionByName(mutual)
-        matched = matched.localCheckpoint(eager=True)
+        rounds.append(mutual)
         used = (
             mutual.select(F.col("src").alias("id"))
             .union(mutual.select(F.col("dst").alias("id")))
@@ -325,8 +335,14 @@ def local_max_matching(graph: GraphDF, max_rounds: int = 64) -> DataFrame:
             .join(used.withColumnRenamed("id", "dst"), "dst", "left_anti")
             .localCheckpoint(eager=True)
         )
-    if matched is None:
+    if not rounds:
         return e.limit(0)
+    matched = rounds[0]
+    for mutual in rounds[1:]:
+        matched = matched.unionByName(mutual)
+    matched = matched.localCheckpoint(eager=True)
+    for mutual in rounds:
+        mutual.unpersist()
     return matched
 
 

@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 
 from networkit_spark.graph import GraphDF
 
+# active frontiers up to this many nodes are broadcast into the edge join
+_BROADCAST_FRONTIER_ROWS = 1_000_000
+
 
 def plp(
     graph: GraphDF,
@@ -43,9 +46,6 @@ def plp(
     max_iterations: int | None = None,
     checkpointer=None,
     use_frontier: bool = True,
-    broadcast_frontier_threshold: int = 1_000_000,
-    truncate_every: int = 1,
-    broadcast_labels: bool | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Returns (id: long, label: long).
@@ -59,30 +59,16 @@ def plp(
     rule. When the frontier is small it is broadcast into the edge join
     (north rule: broadcast of high-degree frontier deltas).
 
-    `truncate_every`: fixed-sweep mode only (no convergence count needed) —
-    fuse this many sweeps into one materialization. Intermediate sweeps
-    cache lazily (zero jobs launched); the block-end localCheckpoint runs
-    the whole block as ONE job, both references to an intermediate label
-    vector hitting its block cache. Labels are bit-identical (same sweeps,
-    different job boundaries — asserted in tests). Whenever a sweep needs
-    its update count (threshold/frontier/checkpointer), cadence is forced
-    to 1 for that sweep.
-
-    `broadcast_labels`: broadcast the |V|-sized label vector into the edge
-    join (and the per-sweep winner table into the |V|⋈winner join) instead
-    of shuffling them — the same knob as pagerank's broadcast_rank /
-    components' broadcast_labels. MEASURED at sf0.1 local[32] (fresh JVM,
-    1 warmup + 3 trials): broadcast medians 17.0s vs shuffle 14.7s — a
-    REGRESSION, unlike wcc (13.5 vs 22.0) and pagerank (17.5 vs 23.4),
-    because PLP's cost sits in the (dst,label) score aggregation whose
-    map-side partials shuffle either way, so the broadcast only adds the
-    serial per-sweep build. Default therefore stays False (opt-in knob for
-    fixed-cost-dominated regimes); results are bit-identical either way
-    (test_plp_broadcast_labels_bit_identical).
+    Every sweep materializes its labels with an eager checkpoint (Parquet
+    with a checkpointer). The label vector and the winner table are joined
+    by shuffle, not broadcast: broadcasting them MEASURED a regression at
+    sf0.1 local[32] (fresh JVM, 1 warmup + 3 trials: 17.0s vs 14.7s
+    medians, unlike wcc and pagerank) because PLP's cost sits in the
+    (dst,label) score aggregation whose map-side partials shuffle either
+    way, so the broadcast only adds the serial per-sweep build. Fusing
+    sweeps per materialization measured slower too (CLAUDE.md rule 10).
     """
     n = graph.number_of_nodes()
-    if broadcast_labels is None:
-        broadcast_labels = False
     if update_threshold is None:
         update_threshold = max(1, int(n / 1e5))  # PLP.cpp default none→n/1e5
     max_it = max_iterations if max_iterations is not None else 10**9
@@ -114,7 +100,6 @@ def plp(
     labels = labels.localCheckpoint(eager=True)
 
     frontier = None  # None = all nodes active
-    interm: list[DataFrame] = []
     it = start
     while it < max_it:
         t0 = time.time()
@@ -124,7 +109,7 @@ def plp(
             if fcount == 0:
                 break
             f = frontier
-            if fcount <= broadcast_frontier_threshold:
+            if fcount <= _BROADCAST_FRONTIER_ROWS:
                 f = F.broadcast(f)
             active_edges = e.join(
                 f.withColumnRenamed("id", "dst"), "dst", "left_semi"
@@ -132,8 +117,7 @@ def plp(
         else:
             active_edges = e
 
-        labels_j = F.broadcast(labels) if broadcast_labels else labels
-        cand = active_edges.join(labels_j, active_edges.src == labels.id).select(
+        cand = active_edges.join(labels, active_edges.src == labels.id).select(
             "dst", "label", "weight"
         )
         scores = cand.groupBy("dst", "label").agg(F.sum("weight").alias("w"))
@@ -154,9 +138,8 @@ def plp(
         )
         # one joined frame carries the new label AND the changed flag — a
         # single action materializes both
-        winner_j = F.broadcast(winner) if broadcast_labels else winner
         joined = (
-            labels.join(winner_j, "id", "left")
+            labels.join(winner, "id", "left")
             .select(
                 "id",
                 F.coalesce("new_label", "label").alias("new"),
@@ -167,12 +150,6 @@ def plp(
             checkpointer is not None
         )
         n_updated = -1
-        block_end = (
-            need_count
-            or truncate_every <= 1
-            or (it - start) % truncate_every == truncate_every - 1
-            or it >= max_it - 1
-        )
         if need_count:
             # persist FIRST, count the chg column from cache — the label
             # projection, frontier, and checkpoint below all read this one
@@ -193,18 +170,9 @@ def plp(
                     "wall_ms": int((time.time() - t0) * 1000),
                 },
             )["labels"]
-        elif block_end:
-            # need_count sweeps read the joined cache; fused block ends
-            # materialize the whole block here
-            new_labels = new_labels.localCheckpoint(eager=True)
-            for df in interm:
-                df.unpersist()
-            interm = []
         else:
-            # fused sweep: lazy cache only — the block-end checkpoint
-            # materializes the whole block in one job
-            new_labels = new_labels.persist()
-            interm.append(new_labels)
+            # a counted sweep's checkpoint reads the joined cache
+            new_labels = new_labels.localCheckpoint(eager=True)
 
         if use_frontier:
             # reactivation (PLP.cpp:91-99): neighbors of changed nodes
@@ -231,8 +199,7 @@ def plp(
 
 
 def plp_fixed(
-    graph: GraphDF, iterations: int, truncate_every: int = 1,
-    broadcast_labels: bool | None = None, stats: dict | None = None,
+    graph: GraphDF, iterations: int, stats: dict | None = None,
 ) -> DataFrame:
     """Exactly `iterations` synchronous sweeps, full recompute — the
     SQL-oracle-parity variant (DuckDB unrolls the same sweeps)."""
@@ -241,8 +208,6 @@ def plp_fixed(
         update_threshold=-1,
         max_iterations=iterations,
         use_frontier=False,
-        truncate_every=truncate_every,
-        broadcast_labels=broadcast_labels,
         stats=stats,
     )
 

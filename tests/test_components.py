@@ -173,20 +173,6 @@ def test_scc_requires_directed(spark):
         strongly_connected_components(g)
 
 
-def test_wcc_check_cadence_bit_identical(spark):
-    # fused supersteps (check_every > 1) change job boundaries and the
-    # convergence-count cadence only — component ids must be bit-identical
-    edges = powerlaw_directed_edges(n=150, m=700)
-    e = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
-    )
-    g = GraphDF.from_edges(e, directed=True)
-    base = _labels(weakly_connected_components(g))
-    fused2 = _labels(weakly_connected_components(g, check_every=2))
-    fused3 = _labels(weakly_connected_components(g, check_every=3))
-    assert base == fused2 == fused3
-
-
 def test_wcc_broadcast_labels_bit_identical(spark):
     # broadcast_labels swaps the per-superstep shuffle join for a broadcast
     # hash join (physical plan only) — component ids must be bit-identical
@@ -200,10 +186,11 @@ def test_wcc_broadcast_labels_bit_identical(spark):
     assert bc == sh
 
 
-def test_wcc_jump_remap_bit_identical(spark):
-    # the adaptive broadcast-remap pointer jump (jump_broadcast_rows) is a
+def test_wcc_jump_remap_bit_identical(spark, monkeypatch):
+    # the adaptive broadcast-remap pointer jump (_JUMP_BROADCAST_ROWS) is a
     # physical-plan change only — labels must be bit-identical to the
     # shuffled |V|⋈|V| self-join it replaces (threshold 0 disables it)
+    from networkit_spark.operators import components
     from networkit_spark.operators.components import _hash_min_fixpoint
 
     edges = powerlaw_directed_edges(n=150, m=700)
@@ -211,27 +198,12 @@ def test_wcc_jump_remap_bit_identical(spark):
         [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
     )
     g = GraphDF.from_edges(e, directed=True)
-    kw = dict(broadcast_labels=False)
-    remap = _hash_min_fixpoint(g.E_sym, g.V, **kw)
-    shuffled = _hash_min_fixpoint(g.E_sym, g.V, jump_broadcast_rows=0, **kw)
+    remap = _hash_min_fixpoint(g.E_sym, g.V, broadcast_labels=False)
+    monkeypatch.setattr(components, "_JUMP_BROADCAST_ROWS", 0)
+    shuffled = _hash_min_fixpoint(g.E_sym, g.V, broadcast_labels=False)
     assert sorted(map(tuple, remap.collect())) == sorted(
         map(tuple, shuffled.collect())
     )
-
-
-def test_scc_check_cadence_bit_identical(spark):
-    from networkit_spark.operators.components import (
-        strongly_connected_components,
-    )
-
-    edges = powerlaw_directed_edges(n=120, m=500)
-    e = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
-    )
-    g = GraphDF.from_edges(e, directed=True)
-    base = _labels(strongly_connected_components(g))
-    fused2 = _labels(strongly_connected_components(g, check_every=2))
-    assert base == fused2
 
 
 def test_scc_deep_chain_with_cycles(spark):

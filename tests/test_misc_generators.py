@@ -122,6 +122,17 @@ def test_local_max_matching_valid(spark):
         used.add(r["dst"])
     assert len(m) >= 5
 
+    # one mega-hub star: leaf v hangs off hub 0 with weight 1 + v % 7, and
+    # ten leaf pairs (10k, 10k+1) share a lighter 0.5 edge. Round 1 matches
+    # the hub to its best leaf (max weight 7, smallest id: 6); every other
+    # leaf's best edge still points at the hub. Round 2 matches the pairs.
+    leaves = 3000
+    star = [(0, v, 1.0 + v % 7) for v in range(1, leaves + 1)]
+    star += [(10 * k, 10 * k + 1, 0.5) for k in range(1, 11)]
+    g = GraphDF.from_edge_list(spark, star, weighted=True, num_nodes=leaves + 1)
+    got = sorted(tuple(r) for r in local_max_matching(g).collect())
+    assert got == [(0, 6, 7.0)] + [(10 * k, 10 * k + 1, 0.5) for k in range(1, 11)]
+
 
 def test_threshold_filter_and_scores(spark):
     g = GraphDF.from_edge_list(spark, KARATE_EDGES, num_nodes=KARATE_N)

@@ -88,13 +88,3 @@ def test_pagerank_csr_fast_path_agrees(spark):
     csr_path = _scores(pagerank_csr(g, tol=1e-6))
     for v in df_path:
         assert math.isclose(df_path[v], csr_path[v], abs_tol=1e-9)
-
-
-def test_pagerank_truncate_cadence_bit_identical(spark):
-    # fused supersteps (truncate_every > 1) change job boundaries only —
-    # the arithmetic, and therefore every float, is identical
-    g = GraphDF.from_edge_list(spark, KARATE_EDGES, num_nodes=KARATE_N)
-    base = _scores(pagerank_fixed(g, iterations=7))
-    fused2 = _scores(pagerank_fixed(g, iterations=7, truncate_every=2))
-    fused4 = _scores(pagerank_fixed(g, iterations=7, truncate_every=4))
-    assert base == fused2 == fused4

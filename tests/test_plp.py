@@ -50,28 +50,3 @@ def test_compact_partition_dense(spark):
     labels = compact_partition(plp(g, update_threshold=0, max_iterations=8))
     vals = sorted({r["label"] for r in labels.collect()})
     assert vals == list(range(len(vals)))  # dense 0..k-1, sorted-old-label order
-
-
-def test_plp_truncate_cadence_bit_identical(spark):
-    # fused sweeps (truncate_every > 1) change job boundaries only — the
-    # synchronous label vector after N sweeps must be bit-identical
-    from networkit_spark.graph import GraphDF
-    from tests.fixtures import KARATE_EDGES, KARATE_N
-
-    g = GraphDF.from_edge_list(spark, KARATE_EDGES, num_nodes=KARATE_N)
-    base = _labels(plp_fixed(g, iterations=5))
-    fused2 = _labels(plp_fixed(g, iterations=5, truncate_every=2))
-    fused4 = _labels(plp_fixed(g, iterations=5, truncate_every=4))
-    assert base == fused2 == fused4
-
-
-def test_plp_broadcast_labels_bit_identical(spark):
-    # broadcast_labels swaps the per-sweep shuffle joins for broadcast hash
-    # joins (physical plan only) — labels must be bit-identical
-    from networkit_spark.graph import GraphDF
-    from tests.fixtures import KARATE_EDGES, KARATE_N
-
-    g = GraphDF.from_edge_list(spark, KARATE_EDGES, num_nodes=KARATE_N)
-    bc = _labels(plp_fixed(g, iterations=5, broadcast_labels=True))
-    sh = _labels(plp_fixed(g, iterations=5, broadcast_labels=False))
-    assert bc == sh

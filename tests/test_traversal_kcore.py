@@ -119,24 +119,6 @@ def test_kcore_hindex_equals_peel(spark):
     assert hidx2 == peel2
 
 
-def test_kcore_hindex_check_cadence_bit_identical(spark):
-    # fused supersteps (check_every > 1) change job boundaries and the
-    # convergence-count cadence only — core numbers must be bit-identical
-    from networkit_spark.operators.kcore import core_decomposition_hindex
-
-    g = GraphDF.from_edge_list(spark, KARATE_EDGES, num_nodes=KARATE_N)
-    base = {r["id"]: r["core"] for r in core_decomposition_hindex(g).collect()}
-    fused2 = {
-        r["id"]: r["core"]
-        for r in core_decomposition_hindex(g, check_every=2).collect()
-    }
-    fused3 = {
-        r["id"]: r["core"]
-        for r in core_decomposition_hindex(g, check_every=3).collect()
-    }
-    assert base == fused2 == fused3
-
-
 def test_kcore_hindex_sweep_is_skew_safe(spark):
     """The h-index superstep must never rank individual neighbors — the
     per-dst row_number sort put the mega-hub's whole adjacency in one task
