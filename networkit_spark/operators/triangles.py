@@ -63,11 +63,11 @@ def triangle_list(
     shuffle join over `wedge_partition_multiplier`× the session's shuffle
     partitions, bounding per-task wedge state instead of spilling."""
     spark = graph.V.sparkSession
-    e_or = oriented_edges(graph).persist()
+    e_or = oriented_edges(graph).localCheckpoint(eager=False)
     stats = e_or.agg(
         F.count("*").alias("m"),
         F.greatest(F.max("src"), F.max("dst")).alias("mx"),
-    ).collect()[0]  # ONE materializing job: row count + id bound together
+    ).collect()[0]  # row count + id bound in one job over the checkpoint
     m, max_id = stats["m"], stats["mx"] or 0
     a = e_or.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     b = e_or.select(F.col("src").alias("v"), F.col("dst").alias("w"))

@@ -6,8 +6,9 @@
 
 plus the two derived edge tables (FIXTURES.md §2), built with
 window-ordered turn adjacency:
-  * agent→tool reply graph: assistant turn at i followed by a tool turn at
-    i+1 ⇒ edge(agent_entity → tool_entity), weight = multiplicity
+  * agent→tool reply graph: assistant turn whose next row in its conv (by
+    turn_idx) is a tool turn ⇒ edge(agent_entity → tool_entity), weight =
+    multiplicity
   * conv→conv graph: per entity, consecutive distinct conv_ids ordered by ts
 
 Synthesis is DETERMINISTIC via a pure-integer LCG
@@ -151,8 +152,10 @@ def transcripts_sql(n_convs: int) -> str:
 
 # --------------------------------------------------------------- derivations
 def reply_pairs(transcripts: DataFrame) -> DataFrame:
-    """(agent_key, tool_key, weight): assistant turn followed (turn_idx+1,
-    same conv) by a tool turn — window-ordered turn adjacency."""
+    """(agent_key, tool_key, weight): an assistant turn whose NEXT row of
+    the same conv, by turn_idx order (`LEAD`, not turn_idx+1: a gap in the
+    turn numbers still pairs), is a tool turn — window-ordered turn
+    adjacency, weight = multiplicity."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     t = transcripts.withColumn("next_role", F.lead("role").over(w)).withColumn(
         "next_tool", F.lead("tool").over(w)
@@ -174,11 +177,15 @@ def mint_ids(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
     entity_key), edges(src,dst,weight)).
 
     The rank is the two-stage scale-safe global_row_numbers (range-
-    repartition + per-partition row_number + broadcast offsets), NOT a
+    repartition + per-partition row_number + partition offsets), NOT a
     single-partition `Window.orderBy` — this is the input layer, the one
-    path guaranteed to see the full 10^12-turn entity dictionary."""
+    path guaranteed to see the full 10^12-turn entity dictionary.
+
+    `pairs` feeds both sides of the entity union and the edge join, so it
+    is materialized once here instead of being re-derived per consumer."""
     from networkit_spark.plans.ranking import global_row_numbers
 
+    pairs = pairs.localCheckpoint(eager=False)
     entities = (
         pairs.select(F.col("agent_key").alias("entity_key"))
         .union(pairs.select(F.col("tool_key").alias("entity_key")))

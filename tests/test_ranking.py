@@ -133,3 +133,89 @@ def test_compact_node_ids_order_preserving(spark):
     m = {r["old_id"]: r["new_id"] for r in mapping.collect()}
     assert m == {7: 0, 55: 1, 100: 2}
     assert sorted(r["id"] for r in g2.V.collect()) == [0, 1, 2]
+
+
+# ---- the per-partition offset lookup: gaps, empties, doubles -------------
+# Range bounds are sampled rows, so on a deterministic input Spark leaves
+# empty range partitions only AFTER the full ones. Partition ids with gaps
+# before and between full ones are made by remapping spark_partition_id to
+# 2p+1 (a bijection, so every row still sees its whole partition).
+
+
+def _gapped_partition_ids(monkeypatch):
+    orig = F.spark_partition_id
+    monkeypatch.setattr(F, "spark_partition_id", lambda: orig() * 2 + 1)
+
+
+def test_global_row_numbers_more_partitions_than_rows(spark):
+    vals = [41, -3, 17, 0, 99]
+    df = spark.createDataFrame([(v,) for v in vals], "x long")
+    used = (
+        df.repartitionByRange(16, "x")
+        .select(F.spark_partition_id().alias("p"))
+        .distinct()
+        .count()
+    )
+    assert used < 16  # empty range partitions after the full ones
+    out = global_row_numbers(df, ["x"], num_partitions=16).collect()
+    assert sorted((r["x"], r["rank"]) for r in out) == [
+        (v, i) for i, v in enumerate(sorted(vals))
+    ]
+
+
+def test_global_row_numbers_partition_id_gaps(spark, monkeypatch):
+    _gapped_partition_ids(monkeypatch)
+    vals = [(i * 7) % 23 for i in range(23)]
+    df = spark.createDataFrame([(v,) for v in vals], "x long")
+    out = global_row_numbers(df, ["x"], num_partitions=4).collect()
+    assert sorted((r["x"], r["rank"]) for r in out) == [
+        (v, i) for i, v in enumerate(sorted(vals))
+    ]
+
+
+def test_ranking_empty_input(spark):
+    from networkit_spark.plans.ranking import prefix_sums, prefix_sums_multi
+
+    df = spark.createDataFrame([(1, 2)], "x long, v long").limit(0)
+    outs = {
+        "rank": global_row_numbers(df, ["x"]),
+        "lo_hi": prefix_sums(df, "x", "v"),
+        "cum": prefix_sums_multi(df, ["x"], ["v"]),
+    }
+    assert outs["rank"].columns == ["x", "v", "rank"]
+    assert outs["lo_hi"].columns == ["x", "v", "hi", "lo"]
+    assert outs["cum"].columns == ["x", "v", "cum_v"]
+    for out in outs.values():
+        assert out.collect() == []
+
+
+def test_prefix_sums_partition_id_gaps(spark, monkeypatch):
+    from networkit_spark.plans.ranking import prefix_sums
+
+    _gapped_partition_ids(monkeypatch)
+    rows = [((i * 11) % 31, (i * 5) % 7) for i in range(31)]
+    df = spark.createDataFrame(rows, "k long, v long")
+    got = {
+        r["k"]: (r["lo"], r["hi"])
+        for r in prefix_sums(df, "k", "v", num_partitions=4).collect()
+    }
+    acc = 0
+    for k, v in sorted(rows):
+        assert got[k] == (acc, acc + v)
+        acc += v
+
+
+def test_prefix_sums_multi_doubles_with_empty_middle_partition(spark, monkeypatch):
+    from networkit_spark.plans.ranking import prefix_sums_multi
+
+    _gapped_partition_ids(monkeypatch)
+    # multiples of 1/8: every partial sum is exact in binary floating point
+    rows = [(k, ((k * 13) % 9) / 8.0, -((k * 3) % 5) / 4.0) for k in range(40)]
+    df = spark.createDataFrame(rows, "k long, a double, b double")
+    out = prefix_sums_multi(df, ["k"], ["a", "b"], num_partitions=3).collect()
+    got = {r["k"]: (r["cum_a"], r["cum_b"]) for r in out}
+    acc_a = acc_b = 0.0
+    for k, a, b in sorted(rows):
+        acc_a += a
+        acc_b += b
+        assert got[k] == (acc_a, acc_b)

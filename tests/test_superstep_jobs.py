@@ -20,6 +20,19 @@ from networkit_spark.operators.components import (
 from networkit_spark.operators.kcore import core_decomposition_hindex
 from networkit_spark.operators.pagerank import pagerank, pagerank_fixed
 from networkit_spark.operators.plp import plp, plp_fixed
+from networkit_spark.operators.triangles import triangle_counts
+from networkit_spark.plans.ranking import (
+    dense_rank_of_distinct,
+    global_row_numbers,
+    per_key_row_numbers,
+    prefix_sums,
+    prefix_sums_multi,
+)
+from networkit_spark.sources.transcripts import (
+    mint_ids,
+    reply_pairs,
+    synthesize_transcripts,
+)
 
 from tests.fixtures import KARATE_EDGES, KARATE_N, powerlaw_directed_edges
 
@@ -50,10 +63,11 @@ CALLS = {
 
 
 def _jobs_of(spark, group, fn):
+    """Jobs launched by `fn()`, which must end in its own actions."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        fn().count()
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -65,7 +79,35 @@ def test_superstep_job_count_at_most_before(spark, name):
     build, call, ceiling = CALLS[name]
     g = build(spark)
     g.V.count()  # graph construction is not the loop's work
-    assert _jobs_of(spark, f"jobs-{name}", lambda: call(g)) <= ceiling
+    assert _jobs_of(spark, f"jobs-{name}", lambda: call(g).count()) <= ceiling
+
+
+def _mint_collected(spark):
+    vertices, edges = mint_ids(reply_pairs(synthesize_transcripts(spark, 200)))
+    vertices.collect()
+    edges.collect()
+
+
+# Input-layer calls. Before mint_ids read its pair table once and the rank
+# applied partition offsets by lookup, these launched 21 (mint_ids) and 11
+# (dense_rank_of_distinct) jobs with this protocol; the ceilings are the
+# counts since.
+INPUT_CALLS = {
+    "mint_ids": (_mint_collected, 13),
+    "dense_rank_of_distinct": (
+        lambda spark: dense_rank_of_distinct(
+            spark.range(600).select((F.col("id") % 37).alias("label")),
+            "label", "r",
+        ).count(),
+        8,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(INPUT_CALLS))
+def test_input_layer_job_count_at_most(spark, name):
+    call, ceiling = INPUT_CALLS[name]
+    assert _jobs_of(spark, f"jobs-{name}", lambda: call(spark)) <= ceiling
 
 
 def _cached_entries(spark):
@@ -108,4 +150,32 @@ def test_fixpoint_releases_every_cache(spark, build, call):
     before = _cached_entries(spark)
     out = call(g)
     out.count()
+    assert _cached_entries(spark) - before == set()
+
+
+def _keyed(spark, mult):
+    # distinct data per case, so no case can reuse another's cached plan
+    return spark.range(300).select(
+        ((F.col("id") * mult) % 300).alias("x"), (F.col("id") % 4).alias("v")
+    )
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda spark: global_row_numbers(_keyed(spark, 41), ["x"]),
+        lambda spark: prefix_sums(_keyed(spark, 43), "x", "v"),
+        lambda spark: prefix_sums_multi(_keyed(spark, 47), ["x"], ["v"]),
+        lambda spark: per_key_row_numbers(_keyed(spark, 53), ["v"], ["x"]),
+        lambda spark: mint_ids(reply_pairs(synthesize_transcripts(spark, 173)))[1],
+        lambda spark: triangle_counts(_karate(spark)),
+    ],
+    ids=[
+        "global_row_numbers", "prefix_sums", "prefix_sums_multi",
+        "per_key_row_numbers", "mint_ids", "triangle_counts",
+    ],
+)
+def test_ranking_and_input_calls_release_every_cache(spark, call):
+    before = _cached_entries(spark)
+    call(spark).count()
     assert _cached_entries(spark) - before == set()
